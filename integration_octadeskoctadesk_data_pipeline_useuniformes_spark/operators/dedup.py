@@ -485,13 +485,8 @@ def simhash_fingerprints(
     return agg.select(F.col(id_col), out.alias("simhash"))
 
 
-def hamming_distance(a: Column, b: Column, bits: int = _SIMHASH_BITS) -> Column:
-    """Popcount of XOR — bit_count is native in Spark ≥3.3 and DuckDB."""
-    return F.bit_count(a.bitwiseXOR(b))
-
-
 # ---------------------------------------------------------------------------
-# n-gram Jaccard (verification stage for candidate pairs)
+# character n-grams (shingles for the near-dup verification stage)
 # ---------------------------------------------------------------------------
 
 
@@ -508,15 +503,6 @@ def char_ngrams(text: Column, n: int = 3) -> Column:
     zipped = F.arrays_zip(*[F.slice(chars, j + 1, F.greatest(m, F.lit(0))) for j in range(n)])
     grams = F.transform(zipped, lambda s: F.concat(*[s[str(j)] for j in range(n)]))
     return F.array_distinct(grams)
-
-
-def ngram_jaccard(text_a: Column, text_b: Column, n: int = 3) -> Column:
-    """Exact Jaccard over distinct char n-gram sets (integer-ratio double)."""
-    a = char_ngrams(text_a, n)
-    b = char_ngrams(text_b, n)
-    inter = F.size(F.array_intersect(a, b)).cast("double")
-    union = F.size(F.array_union(a, b)).cast("double")
-    return F.when(union == 0, F.lit(0.0)).otherwise(inter / union)
 
 
 # ---------------------------------------------------------------------------

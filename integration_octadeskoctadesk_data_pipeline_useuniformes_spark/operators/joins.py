@@ -58,11 +58,6 @@ def full_outer_with_suffixes(
     return joined.drop("__lkey", "__rkey")
 
 
-def left_join(left: DataFrame, right: DataFrame, on: str | list[str]) -> DataFrame:
-    """J2 — left outer equi-join (reference main.py:91)."""
-    return left.join(right, on, "left")
-
-
 def anti_dedup(
     batch: DataFrame,
     sink_keys: DataFrame,

@@ -6,21 +6,7 @@ from collections.abc import Mapping
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import DataType, StringType
-
-
-def rename_select(df: DataFrame, rename_map: Mapping[str, str]) -> DataFrame:
-    """P1 — select exactly the mapped columns, renamed (main.py:46-62, 89).
-
-    Source columns missing from the frame come out as NULL string columns
-    (P2 backfill, main.py:85-87) so downstream schema stays stable.
-    """
-    existing = set(df.columns)
-    cols = [
-        (F.col(src) if src in existing else F.lit(None).cast("string")).alias(dst)
-        for src, dst in rename_map.items()
-    ]
-    return df.select(*cols)
+from pyspark.sql.types import DataType
 
 
 def ensure_columns(df: DataFrame, expected: Mapping[str, DataType | str]) -> DataFrame:
@@ -30,12 +16,6 @@ def ensure_columns(df: DataFrame, expected: Mapping[str, DataType | str]) -> Dat
     if not to_add:
         return df
     return df.withColumns({c: F.lit(None).cast(t) for c, t in to_add.items()})
-
-
-def cast_columns(df: DataFrame, casts: Mapping[str, str]) -> DataFrame:
-    """P5 — cast named columns (string join keys, main.py:96-98)."""
-    present = {c: t for c, t in casts.items() if c in df.columns}
-    return df.withColumns({c: F.col(c).cast(t) for c, t in present.items()})
 
 
 def audit_column(df: DataFrame, name: str = "upload") -> DataFrame:
@@ -65,10 +45,3 @@ def fill_null_keys(
     return df.withColumn(flag, is_blank).withColumn(
         key_col, F.when(is_blank, generator).otherwise(F.col(key_col))
     )
-
-
-def string_backfill(df: DataFrame, col: str) -> DataFrame:
-    """main.py:93-97 — ensure a column exists as string type."""
-    if col not in df.columns:
-        return df.withColumn(col, F.lit(None).cast(StringType()))
-    return df.withColumn(col, F.col(col).cast("string"))

@@ -62,12 +62,13 @@ def checked_norm(a: Column) -> Column:
     only for non-NaN cosines: SQL ordering ranks NaN largest while
     ``>`` predicates treat it as unordered, so a zero-norm vector
     (cosine 0/0 = NaN) would silently diverge from the window form. A
-    zero norm therefore raises at execution instead of mis-ranking
-    (ADVICE r10 / VERDICT r10 #8) — one comparison per evaluation, and
-    the value is bit-identical to ``norm`` whenever the contract holds.
+    zero or NaN norm (a NaN component; Spark's ``NaN != 0.0`` is true,
+    so NaN needs its own test) therefore raises at execution instead of
+    mis-ranking (ADVICE r10 / VERDICT r10 #8), and the value is
+    bit-identical to ``norm`` whenever the contract holds.
     """
     n = norm(a)
-    return F.when(n != 0.0, n).otherwise(
+    return F.when((n != 0.0) & ~F.isnan(n), n).otherwise(
         F.expr(
             "CAST(raise_error('zero-norm vector: cosine is NaN and in-row "
             "ranking would diverge from SQL window ordering "
@@ -966,7 +967,7 @@ def split_drifted_cells(
         # child norms ride the packed row, norm(vec) projected once per
         # row (the ivf_topk factoring — identical doubles, fewer folds)
         packed = cdf.select(
-            "cell", "child", "cv", norm(F.col("cv")).alias("cn")
+            "cell", "child", "cv", checked_norm(F.col("cv")).alias("cn")
         ).agg(F.collect_list(F.struct("cell", "child", "cv", "cn")).alias("__cents"))
         own = F.filter(F.col("__cents"), lambda c: c["cell"] == F.col("cell"))
         best = F.array_min(
@@ -980,7 +981,7 @@ def split_drifted_cells(
                 ),
             )
         )
-        return mem.withColumn("__nv", norm(F.col(vec_col))).crossJoin(
+        return mem.withColumn("__nv", checked_norm(F.col(vec_col))).crossJoin(
             F.broadcast(packed)
         ).select(id_col, vec_col, "cell", best.alias("__b"))
 

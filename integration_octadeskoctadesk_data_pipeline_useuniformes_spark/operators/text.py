@@ -74,10 +74,6 @@ def stopword_ratio_from(
     return hits.cast("double") / F.greatest(F.size(w), F.lit(1)).cast("double")
 
 
-def stopword_ratio(text: Column, stopwords: tuple[str, ...] = LANG_STOPWORDS["en"]) -> Column:
-    return stopword_ratio_from(words(F.lower(text)), stopwords)
-
-
 def quality_score_from(w_lower: Column, text: Column) -> Column:
     """Quality from a pre-tokenized lowercased token array + raw text.
 

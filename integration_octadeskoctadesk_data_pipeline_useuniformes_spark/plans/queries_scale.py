@@ -464,10 +464,6 @@ _CMS_W = 1024
 _CMS_SEEDS = ("cms0:", "cms1:", "cms2:")
 
 
-def _cms_seed_values() -> str:
-    return ", ".join(f"({i}, '{s}')" for i, s in enumerate(_CMS_SEEDS))
-
-
 @register(
     "x_cms_heavy_hitters",
     f"""
@@ -1174,7 +1170,8 @@ def x_ivm_rollup_minmax(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Catalog-growth discipline (r10): registry grep — no query touches
 # commit_merge or any keyed-update surface of the versioned sink (the
 # IVM queries read deltas, x_versioned_skipping_read is read-side
-# pruning); merge_sink/partitioned_sink's S13 surfaces are test-only.
+# pruning); merge_sink's plain-directory MERGE serves the pipeline and
+# the streaming rollup, never a catalog query.
 # Fixture probe: the update predicate (middle event_id fifth, %7) hits
 # 28 rows at sf0.001 and 286 at sf0.01 of N total — selective but
 # non-degenerate at every driver SF — plus two inserted keys.

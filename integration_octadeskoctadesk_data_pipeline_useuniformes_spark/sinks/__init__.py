@@ -2,18 +2,10 @@
 
 from .append_sink import append_with_schema_evolution, create_if_not_exists, read_sink
 from .merge_sink import merge_upsert
-from .partitioned_sink import (
-    append_partitioned,
-    merge_upsert_partitioned,
-    read_partitioned,
-)
 
 __all__ = [
     "append_with_schema_evolution",
     "create_if_not_exists",
     "read_sink",
     "merge_upsert",
-    "append_partitioned",
-    "merge_upsert_partitioned",
-    "read_partitioned",
 ]

@@ -11,11 +11,11 @@ environment) it is a read–anti-join–union–rewrite, isolated behind this
 function so the backend can be swapped. The rewrite is atomic via
 write-to-staging + directory swap.
 
-Scale note: plain-parquet merge rewrites the whole table; a real 100 TB
-deployment partitions the sink (e.g. by month(createdAt)) and rewrites
-only partitions containing matched keys — or uses Delta, where MERGE
-does exactly that file-level pruning. The updates side is broadcast:
-it is one batch's unresolved keys, small by construction.
+Scale note: plain-parquet merge rewrites the whole table; the
+file-pruned MERGE that rewrites only files holding matched keys is
+``sinks/versioned.commit_merge`` (Delta MERGE's shape). The updates
+side is broadcast: it is one batch's unresolved keys, small by
+construction.
 """
 
 from __future__ import annotations
@@ -28,6 +28,35 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .append_sink import read_sink
+
+
+def _apply_updates(sink: DataFrame, updates: DataFrame, key: str) -> DataFrame:
+    """WHEN MATCHED THEN UPDATE as a column substitution: row identity
+    preserved, overlapping columns overwritten from the (broadcast)
+    update row, update-only columns added as additive evolution. The
+    kernel of both this sink's ``merge_upsert`` and the versioned
+    sink's file-pruned ``commit_merge``."""
+    set_cols = [c for c in updates.columns if c != key]
+    u = updates.select(
+        key,
+        F.lit(True).alias("__matched"),
+        *[F.col(c).alias(f"__u_{c}") for c in set_cols],
+    )
+    joined = sink.join(F.broadcast(u), key, "left")
+    out_cols = [F.col(key)]
+    for c in sink.columns:
+        if c == key:
+            continue
+        if c in set_cols:
+            out_cols.append(
+                F.when(F.col("__matched"), F.col(f"__u_{c}")).otherwise(F.col(c)).alias(c)
+            )
+        else:
+            out_cols.append(F.col(c))
+    for c in set_cols:
+        if c not in sink.columns:
+            out_cols.append(F.when(F.col("__matched"), F.col(f"__u_{c}")).alias(c))
+    return joined.select(*out_cols)
 
 
 def merge_upsert(
@@ -47,8 +76,6 @@ def merge_upsert(
     the sink (additive schema evolution). WHEN NOT MATCHED: update rows
     are inserted only when ``insert_unmatched``.
     """
-    from .partitioned_sink import _apply_updates
-
     sink = read_sink(spark, sink_path)
     updates = updates.dropDuplicates([key])
     n_updates = updates.count()

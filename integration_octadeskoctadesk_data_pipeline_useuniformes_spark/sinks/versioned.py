@@ -66,10 +66,12 @@ construction, and min/max zones are conservative.
 
 from __future__ import annotations
 
+import contextlib
 import datetime as _dt
 import hashlib as _hashlib
 import json
 import os
+import shutil
 import uuid as _uuid
 from collections.abc import Iterable, Sequence
 
@@ -607,19 +609,59 @@ def prune_files(path: str, version: int, prune: dict[str, dict]) -> list[str]:
     return [f for f in keep if f in manifest_files]
 
 
-def _write_files(df: DataFrame, path: str) -> list[str]:
-    staging = os.path.join(path, f".commit-{_uuid.uuid4().hex}")
-    df.write.mode("overwrite").parquet(staging)
+def _write_files(
+    df: DataFrame, path: str, staged: list[str] | None = None
+) -> list[str]:
+    """Write ``df`` as new files of the table at ``path``: one Spark
+    write into a private ``.commit-*`` dir, then a rename of each
+    parquet file into the table root. Returns the new file names.
+
+    Every name this puts on disk (the staging dir first, then each
+    renamed file) is appended to ``staged`` the moment it exists, so
+    the enclosing ``_staged`` block reclaims a write that fails
+    part-way as well as one whose publish aborts."""
+    staged = [] if staged is None else staged
+    staging = f".commit-{_uuid.uuid4().hex}"
+    staged.append(staging)
+    df.write.mode("overwrite").parquet(os.path.join(path, staging))
     names = []
-    for fn in os.listdir(staging):
+    for fn in os.listdir(os.path.join(path, staging)):
         if fn.endswith(".parquet"):
             final = f"part-{_uuid.uuid4().hex}-{fn}"
-            os.rename(os.path.join(staging, fn), os.path.join(path, final))
+            os.rename(os.path.join(path, staging, fn), os.path.join(path, final))
+            staged.append(final)
             names.append(final)
-    import shutil
-
-    shutil.rmtree(staging, ignore_errors=True)
+    shutil.rmtree(os.path.join(path, staging), ignore_errors=True)
     return names
+
+
+@contextlib.contextmanager
+def _staged(path: str):
+    """The one owner of a commit's staged files. A write op stages
+    through ``_write_files(df, path, staged)`` and publishes inside the
+    block; on ANY exception (a failed write job, a bloom build, a
+    schema conflict, ``ConcurrentReplaceError``, a failed slot claim)
+    every data file, vector file and ``.commit-*`` dir the block staged
+    is removed before the exception propagates. Staged files no
+    manifest names are invisible to ``vacuum`` (it sweeps only files
+    expired manifests reference), so an abort that kept them would leak
+    them for good.
+
+    A block that publishes several commits (``commit_appends``) removes
+    each commit's files from ``staged`` once its manifest lands: the
+    table owns them from then on."""
+    os.makedirs(path, exist_ok=True)
+    staged: list[str] = []
+    try:
+        yield staged
+    except BaseException:
+        for name in staged:
+            target = os.path.join(path, name)
+            if os.path.isdir(target):
+                shutil.rmtree(target, ignore_errors=True)
+            elif os.path.exists(target):
+                os.remove(target)
+        raise
 
 
 def _publish_manifest(
@@ -823,9 +865,8 @@ def commit_append(
     streaming gate's per-batch history probe needs to stay O(matching
     files) as history grows (VERDICT r8 #2). ``bloom_frames`` does the
     same for DERIVED keys (see ``_build_bloom_entries``)."""
-    os.makedirs(path, exist_ok=True)
-    new_files = _write_files(df, path)
-    try:
+    with _staged(path) as staged:
+        new_files = _write_files(df, path, staged)
         return _publish_manifest(
             path,
             new_files,
@@ -846,47 +887,43 @@ def commit_append(
                 bloom_frames,
             ),
         )
-    except ValueError:
-        # a schema-conflict abort publishes nothing, so the staged
-        # files are referenced by NO manifest — vacuum only sweeps
-        # files expired manifests reference, so the rejected append
-        # must reclaim its own staging or leak it forever (the same
-        # leak class compact()'s ConcurrentReplaceError path cleans)
-        for f in new_files:
-            os.remove(os.path.join(path, f))
-        raise
 
 
 def commit_appends(dfs: Sequence[DataFrame], path: str) -> list[int]:
     """Append several DataFrames as CONSECUTIVE versions, overlapping
     their write jobs; returns the version numbers in argument order.
 
-    Semantics are identical to calling ``commit_append(df, path)`` in a
-    loop: manifests are published strictly in argument order, so the
-    version history, per-version file sets and snapshot contents are
-    the same — only the wall-clock differs. The independent write jobs
-    are submitted from a small thread pool (guide §2.6: Spark happily
-    runs several jobs at once; each job's task tail is back-filled by
-    the next job's tasks) — N sequential write jobs, each too small to
-    fill the cluster, become ~1 job's wall-clock. Used by the bench's
-    versioned fixture sinks, whose 5 per-type/per-range commits were
-    pure serial write latency (r10 measured them as most of those
-    queries' cold time). No per-commit blooms: callers that need
-    ``bloom_keys``/``bloom_frames`` keep the sequential path, where the
-    written-file read-back is the cost that matters.
+    Manifests are published strictly in argument order, one APPEND
+    version per DataFrame, no per-commit blooms (callers that need
+    ``bloom_keys``/``bloom_frames`` use ``commit_append``). The write
+    jobs are submitted from a small thread pool (guide §2.6: Spark
+    happily runs several jobs at once; each job's task tail is
+    back-filled by the next job's tasks) — N sequential write jobs,
+    each too small to fill the cluster, become ~1 job's wall-clock.
+    Used by the bench's versioned fixture sinks, whose 5
+    per-type/per-range commits were pure serial write latency.
+
+    PRECONDITION: no input may scan ``path`` itself. Every input is
+    evaluated before the first of these versions publishes, while its
+    siblings' files are being renamed into the table root, so an input
+    reading the destination would not see the batch's earlier versions
+    (a loop of ``commit_append`` calls would), and a raw directory scan
+    could pick up sibling files mid-commit. If any write job or publish fails,
+    the versions already published stay and every file staged for the
+    unpublished ones (including the failed write's siblings) is
+    reclaimed.
     """
     dfs = list(dfs)
-    os.makedirs(path, exist_ok=True)
     from concurrent.futures import ThreadPoolExecutor
 
-    if len(dfs) > 1:
-        with ThreadPoolExecutor(max_workers=min(len(dfs), 8)) as pool:
-            staged = list(pool.map(lambda df: _write_files(df, path), dfs))
-    else:
-        staged = [_write_files(df, path) for df in dfs]
-    versions: list[int] = []
-    for i, (df, new_files) in enumerate(zip(dfs, staged)):
-        try:
+    with _staged(path) as staged:
+        if len(dfs) > 1:
+            with ThreadPoolExecutor(max_workers=min(len(dfs), 8)) as pool:
+                written = list(pool.map(lambda df: _write_files(df, path, staged), dfs))
+        else:
+            written = [_write_files(df, path, staged) for df in dfs]
+        versions: list[int] = []
+        for df, new_files in zip(dfs, written):
             versions.append(
                 _publish_manifest(
                     path,
@@ -897,16 +934,9 @@ def commit_appends(dfs: Sequence[DataFrame], path: str) -> list[int]:
                     bloom_entries=[],
                 )
             )
-        except ValueError:
-            # a schema-conflict abort publishes nothing for THIS commit
-            # and the later stagings will never publish either — reclaim
-            # all of them (commit_append's leak rule, extended to the
-            # batch's unpublished remainder)
-            for files in staged[i:]:
-                for f in files:
-                    os.remove(os.path.join(path, f))
-            raise
-    return versions
+            for f in new_files:  # published: the table owns them now
+                staged.remove(f)
+        return versions
 
 
 def commit_replace(
@@ -917,18 +947,18 @@ def commit_replace(
 ) -> int:
     """Commit ``df`` as the FULL new state (e.g. a merge result) — old
     versions keep reading their own files."""
-    os.makedirs(path, exist_ok=True)
-    new_files = _write_files(df, path)
-    return _publish_manifest(
-        path,
-        new_files,
-        carry_prev=False,
-        schema=df.schema.jsonValue(),
-        op={"operation": "OVERWRITE"},
-        bloom_entries=_bloom_entries_from_written(
-            df.sparkSession, path, new_files, df.schema.jsonValue(), bloom_keys, bloom_m_bits
-        ),
-    )
+    with _staged(path) as staged:
+        new_files = _write_files(df, path, staged)
+        return _publish_manifest(
+            path,
+            new_files,
+            carry_prev=False,
+            schema=df.schema.jsonValue(),
+            op={"operation": "OVERWRITE"},
+            bloom_entries=_bloom_entries_from_written(
+                df.sparkSession, path, new_files, df.schema.jsonValue(), bloom_keys, bloom_m_bits
+            ),
+        )
 
 
 class ConcurrentReplaceError(RuntimeError):
@@ -1139,11 +1169,11 @@ def compact(
         )
     else:
         relaid = snap.repartition(target_files)
-    rewritten = _write_files(relaid, path)
-    entries = _bloom_entries_from_written(
-        spark, path, rewritten, snap.schema.jsonValue(), bloom_keys, bloom_m_bits
-    )
-    try:
+    with _staged(path) as staged:
+        rewritten = _write_files(relaid, path, staged)
+        entries = _bloom_entries_from_written(
+            spark, path, rewritten, snap.schema.jsonValue(), bloom_keys, bloom_m_bits
+        )
         return _publish_replace_from(
             path,
             rewritten,
@@ -1157,14 +1187,6 @@ def compact(
                 "cluster_by": list(cluster_by) if cluster_by else None,
             },
         )
-    except ConcurrentReplaceError:
-        # the staged rewrite is referenced by no manifest — vacuum only
-        # sweeps files EXPIRED manifests reference, so an aborted
-        # compaction must reclaim its own table-sized staging or leak
-        # it forever
-        for f in rewritten:
-            os.remove(os.path.join(path, f))
-        raise
 
 
 def commit_replace_from(
@@ -1186,12 +1208,11 @@ def commit_replace_from(
     writer's concurrent appends (ADVICE r9: the plain
     ``commit_replace`` republishes the stale base as the full state).
     """
-    os.makedirs(path, exist_ok=True)
-    new_files = _write_files(df, path)
-    entries = _bloom_entries_from_written(
-        df.sparkSession, path, new_files, df.schema.jsonValue(), bloom_keys, bloom_m_bits
-    )
-    try:
+    with _staged(path) as staged:
+        new_files = _write_files(df, path, staged)
+        entries = _bloom_entries_from_written(
+            df.sparkSession, path, new_files, df.schema.jsonValue(), bloom_keys, bloom_m_bits
+        )
         return _publish_replace_from(
             path,
             new_files,
@@ -1199,10 +1220,6 @@ def commit_replace_from(
             entries,
             op={"operation": "OVERWRITE", "guarded_base": base_version},
         )
-    except ConcurrentReplaceError:
-        for f in new_files:
-            os.remove(os.path.join(path, f))
-        raise
 
 
 #: driver-side key-materialization gate for commit_merge (the
@@ -1234,9 +1251,9 @@ def commit_merge(
     at FILE grain — Delta MERGE's physical shape on the plain-parquet
     log. The reference's update path (ticket.py:173-202, driven by
     main.py:146-156) is a serial per-key SQL UPDATE loop; the batch
-    sinks cover it as a whole-table rewrite (merge_sink.py) and a
-    partition-pruned rewrite (partitioned_sink.py), but neither is
-    visible to time travel/CDF/IVM. This commit is:
+    sink covers it as a whole-table rewrite (merge_sink.py, whose
+    ``_apply_updates`` kernel this reuses), which is not visible to
+    time travel/CDF/IVM. This commit is:
 
     1. locate the AFFECTED files of the current snapshot via the
        manifest's zones + key blooms (``prune_files`` on the update
@@ -1327,7 +1344,7 @@ def commit_merge(
             st = read_version(spark, path, base).schema
         aff_df = spark.createDataFrame([], st)
 
-    from .partitioned_sink import _apply_updates
+    from .merge_sink import _apply_updates
 
     if deletion_vectors:
         # Delta's merge-on-deletion-vectors shape: vector out the
@@ -1337,49 +1354,19 @@ def commit_merge(
         # batch touching 100 rows of a gigabyte file appends ~100 rows
         # and one small vector instead of rewriting the file.
         if affected:
-            live = _read_files(spark, path, affected, schema).select(
-                F.element_at(F.split(F.col("_metadata.file_path"), "/"), -1).alias(
-                    "__dv_probe_file"
-                ),
-                F.col("_metadata.row_index").alias("__dv_probe_idx"),
-                "*",
+            live = scoped_persist(
+                _live_rows(spark, path, affected, schema, manifest.get("dv"))
             )
-            existing = {
-                f: e
-                for f, e in (manifest.get("dv") or {}).items()
-                if f in set(affected)
-            }
-            if existing:
-                dv_paths = sorted(
-                    {
-                        os.path.join(path, p)
-                        for e in existing.values()
-                        for p in e["files"]
-                    }
-                )
-                prior = (
-                    spark.read.schema("file string, row_index long")
-                    .parquet(*dv_paths)
-                    .withColumnRenamed("file", "__dv_probe_file")
-                    .withColumnRenamed("row_index", "__dv_probe_idx")
-                )
-                live = live.join(
-                    F.broadcast(prior),
-                    ["__dv_probe_file", "__dv_probe_idx"],
-                    "left_anti",
-                )
-            live = scoped_persist(live)
             matched = live.join(
                 F.broadcast(updates.select(key).distinct()), key, "semi"
             )
             per_file = {
-                r["__dv_probe_file"]: r["cnt"]
-                for r in matched.groupBy("__dv_probe_file")
+                r["__dv_file"]: r["cnt"]
+                for r in matched.groupBy("__dv_file")
                 .agg(F.count("*").alias("cnt"))
                 .collect()
             }
-            matched_data = matched.drop("__dv_probe_file", "__dv_probe_idx")
-            out = _apply_updates(matched_data, updates, key)
+            out = _apply_updates(matched.drop(*_DV_ID), updates, key)
             existing_keys = live.select(key)
         else:
             per_file = {}
@@ -1393,25 +1380,16 @@ def commit_merge(
         out = scoped_persist(out)
         if out.count() == 0 and not per_file:
             return base
-        new_files = _write_files(out, path) if out.count() else []
-        add_dv = None
-        if per_file:
-            vec = matched.select(
-                F.col("__dv_probe_file").alias("file"),
-                F.col("__dv_probe_idx").alias("row_index"),
+        with _staged(path) as staged:
+            new_files = _write_files(out, path, staged) if out.count() else []
+            add_dv = _write_vectors(matched, per_file, path, staged) if per_file else None
+            entries = (
+                _bloom_entries_from_written(
+                    spark, path, new_files, out.schema.jsonValue(), bloom_keys, bloom_m_bits
+                )
+                if new_files
+                else None
             )
-            vec_files = _write_files(vec, path)
-            add_dv = {
-                f: {"files": list(vec_files), "rows": n} for f, n in per_file.items()
-            }
-        entries = (
-            _bloom_entries_from_written(
-                spark, path, new_files, out.schema.jsonValue(), bloom_keys, bloom_m_bits
-            )
-            if new_files
-            else None
-        )
-        try:
             return _publish_replace_from(
                 path,
                 new_files,
@@ -1427,13 +1405,6 @@ def commit_merge(
                     "deletion_vectors": True,
                 },
             )
-        except (ConcurrentReplaceError, ValueError):
-            for f in new_files + (
-                [p for e in (add_dv or {}).values() for p in e["files"]]
-            ):
-                if os.path.exists(os.path.join(path, f)):
-                    os.remove(os.path.join(path, f))
-            raise
 
     merged = _apply_updates(aff_df, updates, key)
     if insert_unmatched:
@@ -1442,11 +1413,11 @@ def commit_merge(
     elif not affected:
         return base  # nothing matched, nothing to insert — no-op
 
-    new_files = _write_files(merged, path)
-    entries = _bloom_entries_from_written(
-        spark, path, new_files, merged.schema.jsonValue(), bloom_keys, bloom_m_bits
-    )
-    try:
+    with _staged(path) as staged:
+        new_files = _write_files(merged, path, staged)
+        entries = _bloom_entries_from_written(
+            spark, path, new_files, merged.schema.jsonValue(), bloom_keys, bloom_m_bits
+        )
         return _publish_replace_from(
             path,
             new_files,
@@ -1456,12 +1427,6 @@ def commit_merge(
             evolve_schema=merged.schema.jsonValue(),
             op={"operation": "MERGE", "key": key, "insert_unmatched": insert_unmatched},
         )
-    except (ConcurrentReplaceError, ValueError):
-        # abort (conflict or schema rejection) publishes nothing — the
-        # staged rewrite must reclaim itself (the compact() convention)
-        for f in new_files:
-            os.remove(os.path.join(path, f))
-        raise
 
 
 def commit_delete(
@@ -1516,66 +1481,32 @@ def commit_delete(
         # matching rows' (file, row-index) identities in a small
         # vector file and touch NO data file — at 100 TB, deleting a
         # handful of rows from a gigabyte file must not rewrite it.
-        # Matching rides the same scan shape the reader applies:
-        # _metadata identity, existing vectors subtracted first (a row
-        # can never be deleted twice, keeping per-file counts exact).
-        live = _read_files(spark, path, affected, manifest.get("schema")).select(
-            F.element_at(F.split(F.col("_metadata.file_path"), "/"), -1).alias(
-                "__dv_probe_file"
-            ),
-            F.col("_metadata.row_index").alias("__dv_probe_idx"),
-            "*",
-        )
-        existing = {
-            f: e
-            for f, e in (manifest.get("dv") or {}).items()
-            if f in set(affected)
-        }
-        if existing:
-            dv_paths = sorted(
-                {os.path.join(path, p) for e in existing.values() for p in e["files"]}
-            )
-            prior = (
-                spark.read.schema("file string, row_index long")
-                .parquet(*dv_paths)
-                .withColumnRenamed("file", "__dv_probe_file")
-                .withColumnRenamed("row_index", "__dv_probe_idx")
-            )
-            live = live.join(
-                F.broadcast(prior), ["__dv_probe_file", "__dv_probe_idx"], "left_anti"
-            )
-        matches = live.filter(F.coalesce(cond, F.lit(False))).select(
-            F.col("__dv_probe_file").alias("file"),
-            F.col("__dv_probe_idx").alias("row_index"),
-        )
+        # Matching rides the reader's own scan (``_live_rows``):
+        # existing vectors are subtracted first, so a row can never be
+        # deleted twice and per-file counts stay exact.
+        matches = _live_rows(
+            spark, path, affected, manifest.get("schema"), manifest.get("dv")
+        ).filter(F.coalesce(cond, F.lit(False)))
         per_file = {
-            r["file"]: r["cnt"]
-            for r in matches.groupBy("file").agg(F.count("*").alias("cnt")).collect()
+            r["__dv_file"]: r["cnt"]
+            for r in matches.groupBy("__dv_file").agg(F.count("*").alias("cnt")).collect()
         }
         if not per_file:
             return base  # nothing matched — committed-nothing no-op
-        vec_files = _write_files(matches, path)
-        add_dv = {
-            f: {"files": list(vec_files), "rows": n} for f, n in per_file.items()
-        }
-        try:
+        with _staged(path) as staged:
             return _publish_replace_from(
                 path,
                 [],
                 base,
                 None,
                 replaced_files=[],
-                add_dv=add_dv,
+                add_dv=_write_vectors(matches, per_file, path, staged),
                 op={
                     "operation": "DELETE",
                     "condition": condition,
                     "deletion_vectors": True,
                 },
             )
-        except ConcurrentReplaceError:
-            for f in vec_files:
-                os.remove(os.path.join(path, f))
-            raise
     aff_df = _read_files_dv(
         spark, path, affected, manifest.get("schema"), manifest.get("dv")
     )
@@ -1583,11 +1514,11 @@ def commit_delete(
     # deleted — a NULL condition keeps the row (a bare ~cond would
     # drop NULL-condition rows, since NOT NULL filters out too)
     kept = aff_df.filter(~F.coalesce(cond, F.lit(False)))
-    new_files = _write_files(kept, path)
-    entries = _bloom_entries_from_written(
-        spark, path, new_files, kept.schema.jsonValue(), bloom_keys, bloom_m_bits
-    )
-    try:
+    with _staged(path) as staged:
+        new_files = _write_files(kept, path, staged)
+        entries = _bloom_entries_from_written(
+            spark, path, new_files, kept.schema.jsonValue(), bloom_keys, bloom_m_bits
+        )
         return _publish_replace_from(
             path,
             new_files,
@@ -1596,10 +1527,6 @@ def commit_delete(
             replaced_files=affected,
             op={"operation": "DELETE", "condition": condition},
         )
-    except ConcurrentReplaceError:
-        for f in new_files:
-            os.remove(os.path.join(path, f))
-        raise
 
 
 def read_version(
@@ -1683,27 +1610,38 @@ def _read_files(
 _DV_BROADCAST_ROWS = 2_000_000
 
 
-def _read_files_dv(
+#: the row-identity columns ``_live_rows`` adds: the data file's name
+#: and the row's index within that (immutable) file — the key a
+#: deletion vector records
+_DV_ID = ("__dv_file", "__dv_idx")
+
+
+def _live_rows(
     spark: SparkSession,
     path: str,
     files: list[str],
     schema: dict | None,
     dv: dict | None,
 ) -> DataFrame:
-    """``_read_files`` with the snapshot's deletion vectors applied:
-    rows whose (file, row-index) identity appears in a vector are
-    dropped by ONE left-anti join against the (small, usually
-    broadcast) vector table — the row-level-delete read path that lets
-    ``commit_delete(deletion_vectors=True)`` delete a handful of rows
-    from a gigabyte file without rewriting it. Row identity rides the
-    parquet scan's ``_metadata`` columns (file name + row index within
-    the immutable file), selected before any other operator so the
-    plan stays a single scan + anti-join."""
-    df = _read_files(spark, path, files, schema)
-    relevant = {f: e for f, e in (dv or {}).items() if f in set(files)}
+    """The rows of ``files`` with their ``_DV_ID`` identity columns,
+    minus the rows the snapshot's deletion vectors ``dv`` already hide
+    — THE one subtraction of existing vectors, shared by the read path
+    and by the vector-writing DELETE/MERGE (which must never vector a
+    row twice). Identity rides the parquet scan's ``_metadata`` columns,
+    selected before any other operator so the plan stays a single scan
+    + ONE left-anti join against the (small, usually broadcast) vector
+    table."""
+    tagged = _read_files(spark, path, files, schema).select(
+        "*",
+        F.element_at(F.split(F.col("_metadata.file_path"), "/"), -1).alias(
+            "__dv_file"
+        ),
+        F.col("_metadata.row_index").alias("__dv_idx"),
+    )
+    wanted = set(files)
+    relevant = {f: e for f, e in (dv or {}).items() if f in wanted}
     if not relevant:
-        return df
-    cols = df.columns
+        return tagged
     # one vector file may serve several data files (a multi-file
     # delete writes one) — read each exactly once
     dv_paths = sorted(
@@ -1717,14 +1655,42 @@ def _read_files_dv(
     )
     if sum(e["rows"] for e in relevant.values()) <= _DV_BROADCAST_ROWS:
         vectors = F.broadcast(vectors)
-    tagged = df.select(
-        "*",
-        F.element_at(F.split(F.col("_metadata.file_path"), "/"), -1).alias(
-            "__dv_file"
+    return tagged.join(vectors, list(_DV_ID), "left_anti")
+
+
+def _write_vectors(
+    rows: DataFrame, per_file: dict[str, int], path: str, staged: list[str]
+) -> dict:
+    """Stage ONE vector file holding the ``_DV_ID`` identities of
+    ``rows`` (a subset of ``_live_rows``) and return the manifest's
+    ``add_dv`` record: {data file: {"files": [vector file], "rows": n}}
+    with ``per_file`` the rows' per-data-file counts."""
+    vec_files = _write_files(
+        rows.select(
+            F.col("__dv_file").alias("file"), F.col("__dv_idx").alias("row_index")
         ),
-        F.col("_metadata.row_index").alias("__dv_idx"),
+        path,
+        staged,
     )
-    return tagged.join(vectors, ["__dv_file", "__dv_idx"], "left_anti").select(*cols)
+    return {f: {"files": list(vec_files), "rows": n} for f, n in per_file.items()}
+
+
+def _read_files_dv(
+    spark: SparkSession,
+    path: str,
+    files: list[str],
+    schema: dict | None,
+    dv: dict | None,
+) -> DataFrame:
+    """``_read_files`` with the snapshot's deletion vectors applied: the
+    row-level-delete read path that lets
+    ``commit_delete(deletion_vectors=True)`` delete a handful of rows
+    from a gigabyte file without rewriting it. A file list no vector
+    touches is the plain scan."""
+    wanted = set(files)
+    if not any(f in wanted for f in dv or {}):
+        return _read_files(spark, path, files, schema)
+    return _live_rows(spark, path, files, schema, dv).drop(*_DV_ID)
 
 
 def delta_files_between(path: str, from_version: int, to_version: int) -> list[str] | None:

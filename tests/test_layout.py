@@ -6,8 +6,10 @@ from __future__ import annotations
 
 import glob
 import os
+import sys
 
 import pyarrow.parquet as pq
+import pytest
 from pyspark.sql import functions as F
 
 from integration_octadeskoctadesk_data_pipeline_useuniformes_spark.sinks.layout import (
@@ -1109,3 +1111,129 @@ def test_deletion_vector_merge_appends_updates_without_rewrites(spark, tmp_path)
     )
     rows3 = {r.id: r.k for r in versioned.read_version(spark, path, v3).collect()}
     assert rows3[5] == "Z5" and len(rows3) == 21
+
+
+def _injected(*_a, **_kw):
+    raise RuntimeError("injected fault")
+
+
+def _boom_frame(spark):
+    # fails at EXECUTION (inside the write job), not at plan time
+    return spark.range(20, 30).select(
+        F.when(F.col("id") == 25, F.raise_error(F.lit("injected fault")))
+        .otherwise(F.col("id"))
+        .alias("id"),
+        F.concat(F.lit("k"), F.col("id")).alias("k"),
+    ).coalesce(1)
+
+
+# op name -> (module attribute to break or None, call(spark, versioned, path))
+_FAULTS = {
+    "commit_append-claim": (
+        "_claim_slot",
+        lambda spark, V, path: V.commit_append(spark.range(1).selectExpr("id", "'x' AS k"), path),
+    ),
+    "commit_replace-claim": (
+        "_claim_slot",
+        lambda spark, V, path: V.commit_replace(spark.range(1).selectExpr("id", "'x' AS k"), path),
+    ),
+    # seven write workers (more than the test session's cores), one
+    # failing: its siblings' files, staged concurrently, go too
+    "commit_appends-worker": (
+        None,
+        lambda spark, V, path: V.commit_appends(
+            [
+                spark.range(lo, lo + 10).selectExpr("id", "concat('k', id) AS k").coalesce(1)
+                for lo in (30, 40, 50)
+            ]
+            + [_boom_frame(spark)]
+            + [
+                spark.range(lo, lo + 10).selectExpr("id", "concat('k', id) AS k").coalesce(1)
+                for lo in (60, 70, 80)
+            ],
+            path,
+        ),
+    ),
+    "commit_replace_from-publish": (
+        "_publish_replace_from",
+        lambda spark, V, path: V.commit_replace_from(
+            spark.range(1).selectExpr("id", "'x' AS k"), path, V.latest_version(path)
+        ),
+    ),
+    "compact-publish": (
+        "_publish_replace_from",
+        lambda spark, V, path: V.compact(spark, path),
+    ),
+    "commit_merge-publish": (
+        "_publish_replace_from",
+        lambda spark, V, path: V.commit_merge(
+            spark, path, spark.createDataFrame([(5, "K5"), (99, "NEW")], "id long, k string"), key="id"
+        ),
+    ),
+    "commit_merge_dv-publish": (
+        "_publish_replace_from",
+        lambda spark, V, path: V.commit_merge(
+            spark,
+            path,
+            spark.createDataFrame([(5, "K5"), (99, "NEW")], "id long, k string"),
+            key="id",
+            deletion_vectors=True,
+        ),
+    ),
+    "commit_delete-publish": (
+        "_publish_replace_from",
+        lambda spark, V, path: V.commit_delete(spark, path, "id % 7 = 0"),
+    ),
+    "commit_delete_dv-publish": (
+        "_publish_replace_from",
+        lambda spark, V, path: V.commit_delete(
+            spark, path, "id % 7 = 0", deletion_vectors=True
+        ),
+    ),
+}
+
+
+@pytest.mark.parametrize("case", sorted(_FAULTS))
+def test_versioned_failed_commit_leaves_only_committed_files(spark, tmp_path, monkeypatch, case):
+    """Fault matrix over every versioned write path: an op that fails
+    at any point — a write job dying mid-batch, the slot claim, the
+    publish — leaves the table at its last committed version, with the
+    directory holding ONLY the manifests plus the data and vector files
+    the latest manifest references: no staged part file, no vector
+    file, no ``.commit-*`` dir. Nothing else would ever reclaim them
+    (vacuum sweeps only files expired manifests reference)."""
+    from integration_octadeskoctadesk_data_pipeline_useuniformes_spark.sinks import versioned
+
+    path = str(tmp_path / "tbl")
+    mk = lambda lo, hi: spark.range(lo, hi).selectExpr(
+        "id", "concat('k', id) AS k"
+    ).coalesce(1)
+    versioned.commit_append(mk(0, 10), path)
+    versioned.commit_append(mk(10, 20), path)
+    # an existing vector, so the table's state references a vector file
+    # and the DV paths subtract it before matching
+    versioned.commit_delete(spark, path, "id % 9 = 4", deletion_vectors=True)
+    before = versioned.latest_version(path)
+
+    attr, op = _FAULTS[case]
+    if attr is not None:
+        monkeypatch.setattr(versioned, attr, _injected)
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)  # interleave the staging threads finely
+    try:
+        with pytest.raises(Exception, match="injected fault"):
+            op(spark, versioned, path)
+    finally:
+        sys.setswitchinterval(switch)
+    monkeypatch.undo()
+
+    assert versioned.latest_version(path) == before, "a failed op publishes nothing"
+    m = versioned._manifest_of(path, before)
+    referenced = set(m["files"]) | {
+        p for e in (m.get("dv") or {}).values() for p in e["files"]
+    }
+    manifests = {f"_v{v}.json" for v in versioned._manifests(path)}
+    on_disk = set(os.listdir(path))
+    assert on_disk == referenced | manifests, (on_disk - referenced - manifests, referenced - on_disk)
+    ids = {r.id for r in versioned.read_version(spark, path).collect()}
+    assert ids == set(range(20)) - {4, 13}

@@ -113,53 +113,6 @@ def test_merge_insert_unmatched(spark, tmp_path):
     assert rows == {"1": "a", "2": "B", "3": "C"}
 
 
-def test_partitioned_merge_prunes_untouched_partitions(spark, tmp_path):
-    """merge_upsert_partitioned rewrites ONLY partitions named by the
-    updates; other partition directories stay byte-identical (the
-    Delta-MERGE file-pruning behavior on plain parquet)."""
-    import os
-
-    from integration_octadeskoctadesk_data_pipeline_useuniformes_spark.sinks import (
-        append_partitioned,
-        merge_upsert_partitioned,
-        read_partitioned,
-    )
-
-    path = str(tmp_path / "psink")
-    rows = [
-        ("1", "Aberto", "2024-01"),
-        ("2", "Aberto", "2024-01"),
-        ("3", "Aberto", "2024-02"),
-        ("4", "Resolvido", "2024-02"),
-    ]
-    df = spark.createDataFrame(rows, "n_ticket string, status_ticket string, p_month string")
-    append_partitioned(df, path, "p_month")
-
-    def files(month):
-        d = os.path.join(path, f"p_month={month}")
-        return sorted(
-            (f, os.path.getmtime(os.path.join(d, f)))
-            for f in os.listdir(d)
-            if f.endswith(".parquet")
-        )
-
-    jan_before, feb_before = files("2024-01"), files("2024-02")
-
-    updates = spark.createDataFrame(
-        [("3", "Resolvido", "2024-02")],
-        "n_ticket string, status_ticket string, p_month string",
-    )
-    applied = merge_upsert_partitioned(spark, path, updates, key="n_ticket", partition_col="p_month")
-    assert applied == 1
-
-    # untouched partition: identical file names AND mtimes (never rewritten)
-    assert files("2024-01") == jan_before
-    assert files("2024-02") != feb_before
-
-    out = {r["n_ticket"]: r["status_ticket"] for r in read_partitioned(spark, path).collect()}
-    assert out == {"1": "Aberto", "2": "Aberto", "3": "Resolvido", "4": "Resolvido"}
-
-
 def test_versioned_sink_concurrent_writers_serialize(spark, tmp_path):
     """Regression for the read-modify-write race: when a competing
     writer claims version N+1 between our read of latest_version and

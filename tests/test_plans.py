@@ -259,7 +259,20 @@ def test_kmeans_assignment_never_shuffles_corpus(spark):
         m.group(1) for m in re.finditer(r"hashpartitioning\((\w+)", plan)
     }
     assert shuffle_keys <= {"cid"}, (shuffle_keys, plan)
+    # the hashpartitioning regex above sees only hash exchanges: a range
+    # or single-partition exchange of corpus rows must be ruled out too.
+    # The one legitimate SinglePartition exchange is the packed centroid
+    # row's: a keyless partial aggregate (one buffer row per task) below it
     assert "RoundRobinPartitioning" not in plan, plan
+    assert "rangepartitioning" not in plan, plan
+    nodes = {
+        int(m.group(1)): m.group(0)
+        for m in re.finditer(r"^\((\d+)\) .*?(?=^\(\d+\) |\Z)", plan, re.M | re.S)
+    }
+    for n, node in nodes.items():
+        if "Arguments: SinglePartition" in node:
+            below = nodes[n - 1]  # a unary node's child is numbered just before it
+            assert "Keys: []" in below and "partial_" in below, (below, plan)
 
 
 def test_outlier_mad_broadcasts_per_source_scalars(spark):

@@ -180,6 +180,33 @@ def test_in_row_ranking_rejects_zero_norm_vectors(spark):
         assert n_zero == 0, (sf, n_zero)
 
 
+def test_in_row_ranking_rejects_nan_component_vectors(spark):
+    """A NaN component makes the norm NaN, and Spark's ``NaN != 0.0`` is
+    TRUE — the guard must test NaN itself, or the NaN cosine reaches the
+    in-row ranking the contract protects. Covers the IVF assignment and
+    split_drifted_cells' child assignment, the two checked_norm users
+    ranking member rows."""
+    import pytest
+    from pyspark.errors.exceptions.captured import SparkRuntimeException
+
+    from integration_octadeskoctadesk_data_pipeline_useuniformes_spark.operators import (
+        similarity as S,
+    )
+
+    rows = [
+        (i, [float("nan"), 1.0, 1.0] if i == 3 else [float(i + j) for j in range(3)], 0)
+        for i in range(6)
+    ]
+    emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>, cell long")
+    seeds = spark.createDataFrame(
+        [(0, [1.0, 0.0, 0.5]), (1, [0.0, 1.0, 0.5])], "seed_id long, seed_vec array<double>"
+    )
+    with pytest.raises(SparkRuntimeException, match="zero-norm vector"):
+        S.ivf_assign_with_distance(emb.drop("cell"), seeds).collect()
+    with pytest.raises(SparkRuntimeException, match="zero-norm vector"):
+        S.split_drifted_cells(emb, seeds, [0], iters=1)[1].collect()
+
+
 def test_lsh_multiprobe_dominates_single_bucket(spark):
     """Probing Hamming-distance-1 buckets must never lose a candidate
     the single-bucket probe had, and recall@10 vs brute force must not
