@@ -59,8 +59,11 @@ def run_batch(spark: SparkSession, sf_dir: str, sink_path: str) -> dict[str, int
 
     obs_before = Observation()
     batch = batch.observe(obs_before, F.count(F.lit(1)).alias("n"))
+    # one read of the sink: each is a mergeSchema read that launches its
+    # own schema-resolution job, and nothing writes the sink until the
+    # append below
+    sink_df = read_sink(spark, sink_path)
     for key in DEDUP_KEYS:
-        sink_df = read_sink(spark, sink_path)
         # a key column exists in the sink only after the first evolved
         # append (seed schema is chat_id/n_ticket, main.py:131-132) —
         # nothing to dedup against until then

@@ -1378,10 +1378,11 @@ def commit_merge(
         elif not per_file:
             return base  # nothing matched, nothing to insert — no-op
         out = scoped_persist(out)
-        if out.count() == 0 and not per_file:
+        n_out = out.count()
+        if n_out == 0 and not per_file:
             return base
         with _staged(path) as staged:
-            new_files = _write_files(out, path, staged) if out.count() else []
+            new_files = _write_files(out, path, staged) if n_out else []
             add_dv = _write_vectors(matched, per_file, path, staged) if per_file else None
             entries = (
                 _bloom_entries_from_written(

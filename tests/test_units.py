@@ -504,3 +504,52 @@ def test_bench_cache_state_sample_present_and_wellformed():
     assert "**cache_state," in src
     assert src.index("**cache_state,") < src.index('"queries":')
     assert src.index("sample_cache_state") < src.index("get_spark")
+
+
+#: The driver JVM policy of ``session.DRIVER_JAVA_OPTIONS``, as HotSpot reports
+#: it, next to the collector the deployment below picks.
+_DRIVER_VM = {
+    "Tier4InvocationThreshold": "50000",
+    "Tier4MinInvocationThreshold": "6000",
+    "Tier4CompileThreshold": "150000",
+    "Tier4BackEdgeThreshold": "400000",
+    "UseParallelGC": "true",
+}
+
+
+def test_driver_jvm_runs_policy_and_keeps_deployment_java_options(tmp_path):
+    """The policy goes in spark.driver.defaultJavaOptions, which Spark
+    prepends to the deployment's extraJavaOptions: a property and a
+    collector choice made there reach the JVM next to the policy (a
+    collector in the policy too would stop HotSpot from starting, and
+    ParallelGC, not the default G1, shows the deployment's flag arrived).
+    The flags are read from the running VM, not the command line: Spark
+    launches the driver with -XX:+IgnoreUnrecognizedVMOptions, so a
+    misspelled flag would be dropped silently."""
+    import json
+    import os
+    import subprocess
+    import sys
+
+    (tmp_path / "spark-defaults.conf").write_text(
+        "spark.driver.extraJavaOptions -Dgraft.probe=1 -XX:+UseParallelGC\n"
+    )
+    code = f"""
+import json, sys
+sys.path.insert(0, {os.path.dirname(os.path.dirname(os.path.abspath(__file__)))!r})
+from integration_octadeskoctadesk_data_pipeline_useuniformes_spark.session import get_spark
+spark = get_spark(app_name="jvm-policy-probe", master="local[1]")
+jvm = spark.sparkContext._jvm
+bean = jvm.java.lang.management.ManagementFactory.getPlatformMXBean(
+    jvm.java.lang.Class.forName("com.sun.management.HotSpotDiagnosticMXBean"))
+print(json.dumps({{"probe": jvm.java.lang.System.getProperty("graft.probe"),
+                  "vm": {{n: bean.getVMOption(n).getValue() for n in {sorted(_DRIVER_VM)!r}}}}}))
+spark.stop()
+"""
+    env = dict(os.environ, SPARK_CONF_DIR=str(tmp_path), SPARK_DRIVER_MEMORY="1g")
+    out = subprocess.run(
+        [sys.executable, "-c", code], env=env, capture_output=True, text=True, timeout=300
+    )
+    assert out.returncode == 0, out.stderr[-2000:]
+    got = json.loads(out.stdout.strip().splitlines()[-1])
+    assert got == {"probe": "1", "vm": _DRIVER_VM}
